@@ -5,9 +5,12 @@
     → summarize (A1-A5) → histogram (A11) → export (S5)
 
 Everything up to the aggregations is a single narrow pipeline —
-scan → mapInPandas parse → codegen projections/filters — so the only
-shuffles are the per-sample aggregations at the end. That is the
-100 TB shape: files parallelize the scan, stats reduce map-side.
+scan → mapInPandas parse straight to wide rows → codegen
+projections/filters — so the only shuffles are the per-sample
+aggregations at the end (tests/test_plans.py pins the point cloud's
+plan as Exchange-free). That is the 100 TB shape: files parallelize
+the scan, stats reduce map-side. Export is the caller's: the reactor
+writes the returned frames as CSV.
 """
 
 from __future__ import annotations
@@ -18,21 +21,21 @@ from pyspark.sql import functions as F
 from fcs_etl_reactor_spark.operators.beads import log_histogram
 from fcs_etl_reactor_spark.operators.compensation import compensate
 from fcs_etl_reactor_spark.operators.gates import apply_gates
-from fcs_etl_reactor_spark.sources.fcs import fcs_wide, read_fcs_long
+from fcs_etl_reactor_spark.sources.fcs import read_fcs_wide
 
 
-def channel_stats(df: DataFrame, channels: list[str]) -> DataFrame:
-    """Per-sample-per-channel summary stats (the reference's stats CSV):
-    count, mean, stddev, geo-mean, min/max, median."""
-    longf = df.select(
-        "sample_id",
-        F.expr(
-            "stack({n}, {args}) AS (channel, value)".format(
-                n=len(channels),
-                args=", ".join(f"'{c}', `{c}`" for c in channels),
-            )
-        ),
+def channel_values(df: DataFrame, channels: list[str]) -> DataFrame:
+    """Wide events → (sample_id, channel, value), one row per channel."""
+    args = ", ".join(f"'{c}', `{c}`" for c in channels)
+    return df.select(
+        "sample_id", F.expr(f"stack({len(channels)}, {args}) AS (channel, value)")
     )
+
+
+def channel_stats(longf: DataFrame) -> DataFrame:
+    """Per-sample-per-channel summary stats (the reference's stats CSV)
+    over channel_values rows: count, mean, stddev, geo-mean, min/max,
+    median."""
     pos = longf.filter(F.col("value") > 0)
     return (
         longf.groupBy("sample_id", "channel")
@@ -62,7 +65,6 @@ def run_fcs_pipeline(
     spillover_inverse: list[list[float]] | None = None,
     calibration: dict[str, tuple[float, float]] | None = None,
     gates: dict | None = None,
-    output_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run the reconstructed reference pipeline; returns the three
     reference outputs as DataFrames: point_cloud, stats, histogram.
@@ -70,15 +72,11 @@ def run_fcs_pipeline(
     calibration maps channel → (a, b) for mefl = a*x + b (linear) —
     log-domain curves come from operators.beads.calibrate.
     """
-    wide = fcs_wide(read_fcs_long(spark, fcs_path), channels)
+    wide = read_fcs_wide(spark, fcs_path, channels)
 
     if spillover_inverse is not None:
-        comp = compensate(wide, channels, spillover_inverse, keep=["sample_id", "event_id"])
-        wide = comp.select(
-            "sample_id",
-            "event_id",
-            *[F.col(f"comp_{c}").alias(c) for c in channels],
-        )
+        wide = compensate(wide, channels, spillover_inverse,
+                          keep=["sample_id", "event_id"], prefix="")
 
     if calibration:
         for ch, (a, b) in calibration.items():
@@ -88,26 +86,6 @@ def run_fcs_pipeline(
         wide = apply_gates(wide, gates).filter(F.col("all_gates"))
         wide = wide.drop("all_gates", *gates.keys())
 
-    point_cloud = wide
-    stats = channel_stats(wide, channels)
-    hist = log_histogram(
-        point_cloud.select(
-            "sample_id",
-            F.expr(
-                "stack({n}, {args}) AS (channel, value)".format(
-                    n=len(channels),
-                    args=", ".join(f"'{c}', `{c}`" for c in channels),
-                )
-            ),
-        ),
-        group_cols=["sample_id", "channel"],
-    )
-
-    if output_path:
-        point_cloud.write.mode("overwrite").partitionBy("sample_id").parquet(
-            f"{output_path}/point_cloud"
-        )
-        stats.write.mode("overwrite").parquet(f"{output_path}/stats")
-        hist.write.mode("overwrite").parquet(f"{output_path}/histogram")
-
-    return {"point_cloud": point_cloud, "stats": stats, "histogram": hist}
+    longf = channel_values(wide, channels)
+    hist = log_histogram(longf, group_cols=["sample_id", "channel"])
+    return {"point_cloud": wide, "stats": channel_stats(longf), "histogram": hist}

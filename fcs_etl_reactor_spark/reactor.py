@@ -133,7 +133,6 @@ def handle_message(spark: SparkSession, msg: dict) -> dict:
         spillover_inverse=msg.get("spillover_inverse"),
         calibration=calibration,
         gates=msg.get("gates"),
-        output_path=None,  # export handled here so formats stay in one place
     )
     written = []
     out_dir = msg.get("output_dir")

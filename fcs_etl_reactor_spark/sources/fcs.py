@@ -14,11 +14,13 @@ Spark-first design:
   parallel unit at 100 TB is the FILE, so binaryFile's
   file-per-partition model is the right granularity);
 - a ``mapInPandas`` parser (Arrow-batched) decodes header+TEXT+DATA
-  per file with NumPy and emits LONG-format rows
+  per file with NumPy. ``read_fcs_wide`` — the pipeline's reader —
+  emits one row per event with a pinned channel list as columns.
+  ``read_fcs_long`` emits LONG-format rows
   (sample_id, event_id, channel, value) — schema-stable regardless of
   each file's dynamic channel set (SURVEY.md §1.1 layout (b));
-- ``fcs_wide`` pivots long→wide (C4) when a fixed channel set is
-  requested at the API edge.
+- ``fcs_wide`` pivots long→wide (C4) with a shuffle; it is off the
+  pipeline path, kept as the reference ``read_fcs_wide`` is tested by.
 
 Parsing is defensive per the spec's quirks: delimiter escaping
 (doubled delimiters inside values), missing $BYTEORD variants, and
@@ -147,6 +149,42 @@ def parse_fcs_bytes(data: bytes) -> tuple[dict[str, str], list[str], "object"]:
     return kv, channels, mat
 
 
+def _map_files(
+    spark: SparkSession, path: str, schema: StructType, to_frame, skip_bad: bool = False
+) -> DataFrame:
+    """binaryFile scan → mapInPandas: ``to_frame(sample_id, kv, channels,
+    mat)`` makes each parsed file's frame; skip_bad drops unparsable files."""
+
+    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import os
+
+        for pdf in batches:
+            for path_, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    kv, channels, mat = parse_fcs_bytes(bytes(content))
+                except Exception:
+                    if skip_bad:
+                        continue
+                    raise
+                yield to_frame(os.path.basename(path_), kv, channels, mat)
+
+    bins = spark.read.format("binaryFile").load(path)
+    return bins.select("path", "content").mapInPandas(_parse, schema)
+
+
+def long_columns(sample_id: str, channels: list[str], mat) -> dict:
+    """One parsed file as (sample_id, event_id, channel, value) arrays."""
+    import numpy as np
+
+    n_tot, n_par = mat.shape
+    return {
+        "sample_id": np.repeat(sample_id, n_tot * n_par),
+        "event_id": np.repeat(np.arange(n_tot, dtype=np.int64), n_par),
+        "channel": np.tile(np.array(channels, dtype=object), n_tot),
+        "value": mat.ravel(),
+    }
+
+
 def read_fcs_long(
     spark: SparkSession, path: str, on_error: str = "fail"
 ) -> DataFrame:
@@ -165,55 +203,49 @@ def read_fcs_long(
     """
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    bins = spark.read.format("binaryFile").load(path)
-    skip_bad = on_error == "skip"
+    return _map_files(
+        spark, path, FCS_LONG_SCHEMA,
+        lambda sid, _kv, chans, mat: pd.DataFrame(long_columns(sid, chans, mat)),
+        skip_bad=on_error == "skip",
+    )
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import os
 
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                sample_id = os.path.basename(row["path"])
-                try:
-                    _, channels, mat = parse_fcs_bytes(bytes(row["content"]))
-                except Exception:
-                    if skip_bad:
-                        continue
-                    raise
-                n_tot, n_par = mat.shape
-                yield pd.DataFrame(
-                    {
-                        "sample_id": np.repeat(sample_id, n_tot * n_par),
-                        "event_id": np.repeat(np.arange(n_tot, dtype=np.int64), n_par),
-                        "channel": np.tile(np.array(channels, dtype=object), n_tot),
-                        "value": mat.ravel(),
-                    }
-                )
+def read_fcs_wide(spark: SparkSession, path: str, channels: list[str]) -> DataFrame:
+    """One row per event: (sample_id, event_id, *channels) as doubles,
+    in the given channel order, straight from each file's matrix — the
+    rows ``fcs_wide(read_fcs_long(...))`` produces, without the long
+    intermediate or the pivot's shuffle.
 
-    return bins.select("path", "content").mapInPandas(_parse, FCS_LONG_SCHEMA)
+    A channel the file lacks is null for all its events; a $PnN that
+    appears twice takes its first column.
+    """
+    import numpy as np
+
+    schema = StructType(
+        FCS_LONG_SCHEMA.fields[:2] + [StructField(c, DoubleType(), True) for c in channels]
+    )
+
+    def to_frame(sample_id, _kv, names, mat):
+        n_tot = mat.shape[0]
+        cols = {"sample_id": np.repeat(sample_id, n_tot),
+                "event_id": np.arange(n_tot, dtype=np.int64)}
+        for c in channels:
+            # list.index is the first match; a missing channel's NaN
+            # becomes null at the Arrow boundary (pandas null mask)
+            cols[c] = mat[:, names.index(c)] if c in names else np.full(n_tot, np.nan)
+        return pd.DataFrame(cols)
+
+    return _map_files(spark, path, schema, to_frame)
 
 
 def read_fcs_metadata(spark: SparkSession, path: str) -> DataFrame:
     """TEXT-segment metadata as (sample_id, key, value) rows."""
-    bins = spark.read.format("binaryFile").load(path)
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                sample_id = os.path.basename(row["path"])
-                kv, _, _ = parse_fcs_bytes(bytes(row["content"]))
-                yield pd.DataFrame(
-                    {
-                        "sample_id": [sample_id] * len(kv),
-                        "key": list(kv.keys()),
-                        "value": list(kv.values()),
-                    }
-                )
-
-    return bins.select("path", "content").mapInPandas(_parse, FCS_META_SCHEMA)
+    return _map_files(
+        spark, path, FCS_META_SCHEMA,
+        lambda sid, kv, _chans, _mat: pd.DataFrame(
+            {"sample_id": [sid] * len(kv), "key": list(kv), "value": list(kv.values())}
+        ),
+    )
 
 
 def fcs_wide(long_df: DataFrame, channels: list[str]) -> DataFrame:

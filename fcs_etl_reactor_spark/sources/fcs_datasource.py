@@ -12,10 +12,13 @@ the Python Data Source API; no per-row Python).
 
 Scale: planning lists files driver-side (same as any file source);
 each partition is one file, so a 100k-file archive fans out to 100k
-tasks with zero cross-file coordination. For few-but-huge files,
-read_fcs_long's binaryFile+mapInPandas path has identical semantics —
-the two share parse_fcs_bytes, and the equivalence is asserted in
-tests/test_fcs.py.
+tasks with zero cross-file coordination. Both readers share
+parse_fcs_bytes and sources/fcs.long_columns (same rows, asserted in
+tests/test_fcs.py). Measured on a 4-core VM (perfbench/README.md),
+format("fcs") is slower than binaryFile+mapInPandas: 3.2 s against
+1.0 s on 32 files × 100 events, 0.5 s against 0.4 s on 4 × 8,000.
+So the reactor reads through binaryFile (sources/fcs.read_fcs_wide);
+format("fcs") stays for q5m_fcs_datasource and readStream.
 """
 
 from __future__ import annotations
@@ -26,6 +29,15 @@ import os
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 FCS_DDL_SCHEMA = "sample_id string, event_id bigint, channel string, value double"
+
+
+def _file_columns(path: str) -> dict:
+    """One .fcs file parsed to long-format column arrays."""
+    from fcs_etl_reactor_spark.sources.fcs import long_columns, parse_fcs_bytes
+
+    with open(path, "rb") as fh:
+        _, channels, mat = parse_fcs_bytes(fh.read())
+    return long_columns(os.path.basename(path), channels, mat)
 
 
 class FCSFilePartition(InputPartition):
@@ -50,25 +62,10 @@ class FCSDataSourceReader(DataSourceReader):
 
     def read(self, partition: FCSFilePartition):
         # Executor-side: parse ONE file, emit one Arrow batch. Imports
-        # stay inside read() so the planner never needs numpy/pyarrow.
-        import numpy as np
+        # stay inside read() so the planner never needs pyarrow.
         import pyarrow as pa
 
-        from fcs_etl_reactor_spark.sources.fcs import parse_fcs_bytes
-
-        with open(partition.path, "rb") as fh:
-            _, channels, mat = parse_fcs_bytes(fh.read())
-        sample_id = os.path.basename(partition.path)
-        n_tot, n_par = mat.shape
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.repeat(sample_id, n_tot * n_par)),
-                pa.array(np.repeat(np.arange(n_tot, dtype=np.int64), n_par)),
-                pa.array(np.tile(np.array(channels, dtype=object), n_tot)),
-                pa.array(mat.ravel()),
-            ],
-            names=["sample_id", "event_id", "channel", "value"],
-        )
+        yield pa.RecordBatch.from_pydict(_file_columns(partition.path))
 
 
 class FCSDataSource(DataSource):
@@ -109,14 +106,7 @@ from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
 
 def _parse_file_rows(path: str):
-    from fcs_etl_reactor_spark.sources.fcs import parse_fcs_bytes
-
-    with open(path, "rb") as fh:
-        _, channels, mat = parse_fcs_bytes(fh.read())
-    sample_id = os.path.basename(path)
-    for ev in range(mat.shape[0]):
-        for ci, ch in enumerate(channels):
-            yield (sample_id, ev, ch, float(mat[ev, ci]))
+    return zip(*(col.tolist() for col in _file_columns(path).values()))
 
 
 class FCSStreamReader(SimpleDataSourceStreamReader):

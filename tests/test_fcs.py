@@ -25,6 +25,7 @@ from fcs_etl_reactor_spark.sources.fcs import (
     parse_fcs_bytes,
     read_fcs_long,
     read_fcs_metadata,
+    read_fcs_wide,
 )
 
 
@@ -96,6 +97,34 @@ class TestFcsSpark:
         a0 = wide.filter("sample_id = 'sample_a.fcs' AND event_id = 0").collect()[0]
         assert (a0["FSC-A"], a0["SSC-A"], a0["FL1-A"]) == (100.0, 5.0, 1.0)
 
+    def test_wide_reader_equals_pivot(self, spark, fcs_dir):
+        channels = ["FL1-A", "FSC-A", "SSC-A"]
+        direct = read_fcs_wide(spark, fcs_dir, channels)
+        pivot = fcs_wide(read_fcs_long(spark, fcs_dir), channels)
+        assert direct.columns == pivot.columns == ["sample_id", "event_id", *channels]
+        assert direct.count() == 5
+        assert direct.exceptAll(pivot).count() == 0
+        assert pivot.exceptAll(direct).count() == 0
+
+    def test_wide_reader_missing_channel_is_null(self, spark, tmp_path):
+        (tmp_path / "full.fcs").write_bytes(
+            make_fcs_bytes(["FSC-A", "FL1-A"], [[1.0, 2.0], [3.0, 4.0]]))
+        (tmp_path / "short.fcs").write_bytes(
+            make_fcs_bytes(["FSC-A"], [[5.0], [6.0], [7.0]]))
+        wide = read_fcs_wide(spark, str(tmp_path), ["FSC-A", "FL1-A"])
+        short = wide.filter("sample_id = 'short.fcs'")
+        assert sorted(r["FSC-A"] for r in short.collect()) == [5.0, 6.0, 7.0]
+        assert short.filter(F.col("FL1-A").isNull()).count() == 3
+        assert wide.filter(F.isnan("FL1-A")).count() == 0
+        assert wide.filter("sample_id = 'full.fcs'").filter(
+            F.col("FL1-A").isNotNull()).count() == 2
+
+    def test_wide_reader_duplicate_pnn_takes_first(self, spark, tmp_path):
+        (tmp_path / "dup.fcs").write_bytes(
+            make_fcs_bytes(["X", "Y", "X"], [[1.0, 2.0, 9.0], [3.0, 4.0, 8.0]]))
+        rows = read_fcs_wide(spark, str(tmp_path), ["X", "Y"]).orderBy("event_id").collect()
+        assert [(r["X"], r["Y"]) for r in rows] == [(1.0, 2.0), (3.0, 4.0)]
+
 
 class TestGates:
     def _pts(self, spark):
@@ -164,7 +193,7 @@ class TestBeads:
 
 
 class TestPipeline:
-    def test_end_to_end(self, spark, fcs_dir, tmp_path):
+    def test_end_to_end(self, spark, fcs_dir):
         out = run_fcs_pipeline(
             spark,
             fcs_dir,
@@ -172,7 +201,6 @@ class TestPipeline:
             spillover_inverse=[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]],
             calibration={"FL1-A": (2.0, 0.0)},
             gates={"fsc": range_gate("FSC-A", 50.0, 1000.0)},
-            output_path=str(tmp_path / "out"),
         )
         stats = {(r["sample_id"], r["channel"]): r for r in out["stats"].collect()}
         # sample_a rows all pass fsc gate; sample_b rows (10,20) all fail
@@ -180,10 +208,7 @@ class TestPipeline:
         assert ("sample_b.fcs", "FSC-A") not in stats
         # calibration doubled FL1-A: mean of (2,4,6) = 4
         assert stats[("sample_a.fcs", "FL1-A")]["mean"] == pytest.approx(4.0)
-        # outputs written
-        assert (tmp_path / "out" / "stats").exists()
-        pc = spark.read.parquet(str(tmp_path / "out" / "point_cloud"))
-        assert pc.count() == 3
+        assert out["point_cloud"].count() == 3
 
 
 class TestFcsDataSource:
@@ -210,6 +235,15 @@ class TestFcsDataSource:
 
 
 class TestFcsStreamSource:
+    def test_stream_reader_rows_equal_long_reader(self, spark, fcs_dir):
+        from fcs_etl_reactor_spark.sources.fcs_datasource import FCSStreamReader
+
+        rows, end = FCSStreamReader({"path": fcs_dir}).read({"files": []})
+        got = list(rows)
+        assert end == {"files": ["sample_a.fcs", "sample_b.fcs"]}
+        assert len(got) == 15
+        assert set(got) == {tuple(r) for r in read_fcs_long(spark, fcs_dir).collect()}
+
     def test_streaming_fcs_tails_directory(self, spark, tmp_path):
         import numpy as np
 

@@ -426,3 +426,27 @@ def test_sql_udf_inlines_without_python(spark):
     assert "EvalPython" not in plan and "Python" not in plan
     ex = explain_str(spark, "qa1_sql_udf")
     assert "PushedFilters" in ex and "c_acctbal" in ex
+
+
+def test_reactor_point_cloud_is_one_narrow_pipeline(spark, tmp_path):
+    # the reactor parses straight to wide rows: the point cloud's plan
+    # through compensate, calibrate and gate has no shuffle at all
+    from fcs_etl_reactor_spark.operators.gates import range_gate
+    from fcs_etl_reactor_spark.reactor import handle_message
+    from fcs_etl_reactor_spark.sources.fcs import make_fcs_bytes
+
+    channels = ["FSC-A", "SSC-A"]
+    for name in ("a.fcs", "b.fcs"):
+        (tmp_path / name).write_bytes(make_fcs_bytes(channels, [[1.0, 2.0], [30.0, 4.0]]))
+    res = handle_message(spark, {
+        "fcs_dir": str(tmp_path),
+        "channels": channels,
+        "spillover_inverse": [[1.0, 0.0], [0.1, 1.0]],
+        "calibration": {"SSC-A": [2.0, 0.0]},
+        "gates": {"fsc": range_gate("FSC-A", 10.0, 100.0)},
+    })
+    pc = res["outputs"]["point_cloud"]
+    assert pc.count() == 2
+    s = pc._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in s, s
+    assert "Exchange" not in s, s
